@@ -22,8 +22,8 @@ object GraftConf {
     // to amortize task overhead, small enough that one split's rows +
     // shuffle state fit executor memory comfortably.
     "spark.sql.files.maxPartitionBytes" -> (128L * 1024 * 1024).toString,
-    // Dynamic partition overwrite: partitioned sinks (the hash-bucketed
-    // merge target) replace only written partitions.
+    // Dynamic partition overwrite: a partitioned overwrite replaces only
+    // the partitions it writes.
     "spark.sql.sources.partitionOverwriteMode" -> "dynamic",
     // Parquet writers: snappy matches the reference's staging compression
     // (embeddings-pipeline.py:255).

@@ -42,17 +42,17 @@ object Pipeline {
       fallbackDate: Timestamp = Timestamp.valueOf("2024-01-01 00:00:00"),
       mainRefcoMaxLength: Int = graft.schema.Schemas.MainRefcoMaxLength,
       cleanupStaging: Boolean = true,
-      /** > 0 ⇒ hash-bucket-partitioned target with partition-pruned
-        * incremental merges (only touched buckets read + rewritten — the
-        * 100 TB layout); 0 ⇒ snapshot-pointer rewrite of the whole
-        * target. */
+      /** > 0 ⇒ manifest-bucketed target
+        * ([[graft.operators.Upsert.mergeIntoManifestBucketedParquet]]):
+        * each run reads and rewrites only the buckets its batch touches
+        * and commits with one atomic manifest create — the 100 TB layout;
+        * 0 ⇒ snapshot-pointer rewrite of the whole target. */
       mergeBuckets: Int = 0,
-      /** With mergeBuckets > 0: commit each run via the immutable-file
-        * manifest layout ([[graft.operators.Upsert.mergeIntoManifestBucketedParquet]])
-        * — incremental bucket rewrite AND atomic object-store-safe
-        * publish, no torn window. false keeps the dynamic-partition-
-        * overwrite layout (torn runs detected via `_merge_manifest`). */
-      manifestCommit: Boolean = false,
+      /** Selects nothing: `mergeBuckets > 0` always means the manifest
+        * layout. Kept so existing callers that pass `true` still compile;
+        * `false` with `mergeBuckets > 0` asked for the removed
+        * dynamic-partition-overwrite layout and is rejected by [[run]]. */
+      manifestCommit: Boolean = true,
       /** Enforce the target DDL's fixed vector width `VECTOR(FLOAT, dim)`
         * (`CONFIGURATION.md:109`): ragged vectors are quarantined
         * (`bad_vector_dim`) instead of flowing into a target that would
@@ -107,6 +107,10 @@ object Pipeline {
       cjkUnmapped: Long = 0L)
 
   def run(spark: SparkSession, conf: Config): RunStats = {
+    require(conf.manifestCommit || conf.mergeBuckets <= 0,
+      "manifestCommit = false with mergeBuckets > 0 asks for the " +
+        "hash-bucketed dynamic-partition-overwrite layout, which was " +
+        "removed: bucketed targets always use the manifest layout")
     // F2 rides the scan: the reference's Mongo query filters empty
     // embeddings server-side. The JSON path additionally keeps malformed
     // lines alive (flag `__malformed`) so they reach the quarantine count
@@ -205,13 +209,8 @@ object Pipeline {
     val observed = withDim.observe(unique, count(lit(1)).as("n"))
 
     // J3: idempotent merge (cleaned_ref inserted but never updated)
-    if (conf.mergeBuckets > 0 && conf.manifestCommit)
+    if (conf.mergeBuckets > 0)
       Upsert.mergeIntoManifestBucketedParquet(spark, conf.targetPath, observed,
-        keys = Seq("main_refco"), nBuckets = conf.mergeBuckets,
-        insertOnlyCols = Set("cleaned_ref"),
-        refreshExprs = Map("embedding_inserted_at" -> current_timestamp()))
-    else if (conf.mergeBuckets > 0)
-      Upsert.mergeIntoHashBucketedParquet(spark, conf.targetPath, observed,
         keys = Seq("main_refco"), nBuckets = conf.mergeBuckets,
         insertOnlyCols = Set("cleaned_ref"),
         refreshExprs = Map("embedding_inserted_at" -> current_timestamp()))

@@ -23,8 +23,8 @@ import graft.operators.FileStats
   *    so a SQL join of two tables co-bucketed on the join keys (same
   *    `n`, same hash — [[GraftBucketFunction]] is the identity both
   *    sides resolve against) runs with ZERO Exchange on either side —
-  *    the property `Upsert.mergeIntoBucketedTable` always had for
-  *    library callers, now for `SELECT … JOIN` through the catalog. At
+  *    the co-location a bucketed `saveAsTable` gives Spark's own
+  *    tables, here for `SELECT … JOIN` through the catalog. At
   *    100 TB that is the difference between a metadata decision and
   *    re-shuffling both tables.
   *  - '''Runtime filtering''': [[filter]] accepts the executor-time
@@ -41,8 +41,8 @@ import graft.operators.FileStats
   * manifest's file list (round 18): the manifest already names every
   * file, so handing the set to Spark's InMemoryFileIndex per bucket
   * re-paid ~2 ms of driver listing per file — 26 s of planning at
-  * nBuckets=4096 (ScaleProfile r18 measured 2.2/10.2/26.5 s at
-  * 256/1024/4096). One `getFileStatus` pass supplies lengths for the
+  * nBuckets=4096 (round 18 measured 2.2/10.2/26.5 s at 256/1024/4096;
+  * SURVEY.md §6.-2s). One `getFileStatus` pass supplies lengths for the
   * standard maxSplitBytes packing, and the same pass feeds the reported
   * statistics. The wrapper owns WHICH files a task sees, never HOW
   * bytes are decoded. (Tradeoff: no HDFS locality hints — the planned

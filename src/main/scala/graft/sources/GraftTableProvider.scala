@@ -28,8 +28,7 @@ import graft.operators.{FileStats, Upsert}
   *     with the read-side pointer roll-forward (newest committed manifest
   *     wins over a lagging `_current`);
   *   - snapshot-pointer: the live snapshot directory;
-  *   - plain / hash-bucketed: the directory itself (Spark's partition
-  *     discovery picks up `__bucket=` dirs like any partitioned dataset).
+  *   - plain: the directory itself.
   *
   * Options:
   *   - `snapshot`: time travel — a name from [[Upsert.snapshots]]
@@ -582,7 +581,7 @@ private[sources] class GraftScanBuilder(tableSchema: StructType, path: String,
     }
     // group rows in a deterministic order (the plan is fingerprinted and
     // replays must be stable): sort by the group key's string rendering
-    val groups = grouped.toSeq.sortBy(_._1.mkString(" "))
+    val groups = grouped.toSeq.sortBy(_._1.mkString("\u0000"))
     val answered = groups.map { case (key, rels) =>
       key -> answerGroup(rels).getOrElse(return None)
     }

@@ -45,7 +45,7 @@ class PipelineSpec extends SparkSpecBase {
     assert(keys.contains("xy"))
   }
 
-  test("manifest-commit bucketed pipeline merges incrementally") {
+  test("manifest-bucketed pipeline merges incrementally") {
     val dir = Files.createTempDirectory("graft-pipe-manifest").toString
     val conf = Pipeline.Config(
       sourcePath = s"$dir/source",
@@ -53,7 +53,7 @@ class PipelineSpec extends SparkSpecBase {
       statePath = s"$dir/state.json",
       stagingPath = s"$dir/staging",
       vectorDim = 2,
-      mergeBuckets = 4, manifestCommit = true)
+      mergeBuckets = 4)
 
     Seq(
       doc("s1", "2024-02-01 10:00:00", "r1", ""),
@@ -240,6 +240,19 @@ class PipelineSpec extends SparkSpecBase {
     val ok = Pipeline.run(spark, conf(1L))
     assert(ok.uniqueRecords == 2L)
     assert(graft.operators.Upsert.readTarget(spark, s"$dir/target").count() == 2L)
+  }
+
+  test("manifestCommit = false with mergeBuckets > 0 is rejected") {
+    val dir = Files.createTempDirectory("graft-pipe-legacy").toString
+    val conf = Pipeline.Config(
+      sourcePath = s"$dir/source",
+      targetPath = s"$dir/target",
+      statePath = s"$dir/state.json",
+      stagingPath = s"$dir/staging",
+      mergeBuckets = 8, manifestCommit = false)
+    val e = intercept[IllegalArgumentException](Pipeline.run(spark, conf))
+    assert(e.getMessage.contains("removed"), e.getMessage)
+    assert(!new java.io.File(conf.targetPath).exists())
   }
 
   test("pipeline with hash-bucketed incremental merge target") {

@@ -103,24 +103,23 @@ class RunErasureSpec extends SparkSpecBase {
       .collect().toSeq == Seq("b"))
   }
 
-  test("hash-bucketed target auto-detected — layout NOT converted to snapshots") {
+  test("hash-partitioned target is refused, not reported as erased") {
     val dir = Files.createTempDirectory("graft-erasure-hb").toString
     val target = s"$dir/target"
-    Upsert.mergeIntoHashBucketedParquet(spark, target,
-      (0L until 20L).map(k => (k, s"v$k")).toDF("key", "v"), Seq("key"),
-      nBuckets = 4)
+    (0L until 20L).map(k => (k, s"v$k")).toDF("key", "v")
+      .withColumn("__bucket", pmod(xxhash64($"key"), lit(4)).cast("int"))
+      .write.partitionBy("__bucket").parquet(target)
     Seq(5L).toDF("key").write.parquet(s"$dir/keys")
-    RunErasure.run(spark, Array(target, s"$dir/keys",
-      "--key-col", "key", "--merge-buckets", "4"))
-    assert(spark.read.parquet(target).select("key").as[Long].collect().toSet ==
-      (0L until 20L).toSet - 5L)
-    // the layout contract survives: no _current pointer, no snap dirs,
-    // and a subsequent hash-bucketed merge still works
+    val e = intercept[IllegalStateException] {
+      RunErasure.run(spark, Array(target, s"$dir/keys",
+        "--key-col", "key", "--merge-buckets", "4"))
+    }
+    assert(e.getMessage.contains("hash-partitioned"), e.getMessage)
+    // nothing erased, nothing converted: the key is still readable and
+    // the directory gained no pointer or snapshot
+    assert(spark.read.parquet(target).where($"key" === 5L).count() == 1)
     assert(!new java.io.File(s"$target/_current").exists())
     assert(!new java.io.File(target).listFiles().exists(_.getName.startsWith("snap-")))
-    Upsert.mergeIntoHashBucketedParquet(spark, target,
-      Seq((100L, "new")).toDF("key", "v"), Seq("key"), nBuckets = 4)
-    assert(spark.read.parquet(target).count() == 20L)
   }
 
   test("manifest-bucketed target auto-detected and bucket-pruned") {

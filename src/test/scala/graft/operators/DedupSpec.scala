@@ -7,6 +7,18 @@ import graft.SparkSpecBase
 class DedupSpec extends SparkSpecBase {
   import spark.implicits._
 
+  test("salted top-k equals plain top-k, including on a hot key") {
+    val hot = (1 to 500).map(i => (1L, i.toLong))
+    val cold = Seq((2L, 7L), (2L, 3L), (3L, 9L))
+    val df = (hot ++ cold).toDF("k", "v")
+    val plain = Dedup.topKPerKey(df, 3, Seq("k"), Seq(col("v").desc))
+      .as[(Long, Long)].collect().toSet
+    val salted = Dedup.topKPerKeySalted(df, 3, Seq("k"), Seq(col("v").desc),
+      saltOn = Seq(col("v")), saltBuckets = 8)
+      .as[(Long, Long)].collect().toSet
+    assert(salted == plain)
+  }
+
   test("W1: keep-latest per key with deterministic tie-break") {
     val df = Seq(
       ("k1", "2024-01-01T00:00:00", 1L),

@@ -7,8 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpecBase
 
 /** Manifest-bucketed target: incremental bucket rewrite + atomic
-  * pointer commit together (the object-store-safe upgrade over dynamic
-  * partition overwrite's torn window). */
+  * manifest commit together — the only bucketed merge layout. */
 class ManifestMergeSpec extends SparkSpecBase {
   import spark.implicits._
 
@@ -597,6 +596,49 @@ class ManifestMergeSpec extends SparkSpecBase {
       Seq((3L, "back")).toDF("key", "v"), Seq("key"), nBuckets = 4)
     assert(Upsert.storedNBuckets(spark, path).contains(8))
     assert(Upsert.readManifestTable(spark, path).count() == 39)
+  }
+
+  test("manifest writers refuse a snapshot-pointer target they cannot see") {
+    val path = mkTarget()
+    Upsert.mergeIntoParquet(spark, path,
+      (0L until 100L).map(k => (k, s"v$k")).toDF("key", "v"), Seq("key"))
+    val one = Seq((1000L, "new")).toDF("key", "v")
+    val e = intercept[IllegalStateException] {
+      Upsert.mergeIntoManifestBucketedParquet(spark, path, one, Seq("key"),
+        nBuckets = 4)
+    }
+    assert(e.getMessage.contains("snap-000000000"), e.getMessage)
+    intercept[IllegalStateException] {
+      Upsert.appendToManifestBucketedParquet(spark, path, one, Seq("key"),
+        nBuckets = 4)
+    }
+    assert(Upsert.readTarget(spark, path).count() == 100)
+    assert(!new java.io.File(path).listFiles().exists(f =>
+      f.getName.endsWith(".manifest.json") || f.getName == "data"))
+  }
+
+  test("manifest writers refuse a hash-partitioned directory they cannot see") {
+    val path = mkTarget()
+    (0L until 100L).map(k => (k, s"v$k")).toDF("key", "v")
+      .withColumn("__bucket", pmod(xxhash64($"key"), lit(4)).cast("int"))
+      .write.partitionBy("__bucket").parquet(path)
+    val e = intercept[IllegalStateException] {
+      Upsert.mergeIntoManifestBucketedParquet(spark, path,
+        Seq((1000L, "new")).toDF("key", "v"), Seq("key"), nBuckets = 4)
+    }
+    assert(e.getMessage.contains("__bucket="), e.getMessage)
+    assert(Upsert.readTarget(spark, path).count() == 100)
+  }
+
+  test("a crashed first attempt's data dir does not block the first commit") {
+    val path = mkTarget()
+    Seq((1L, "TORN")).toDF("key", "v").withColumn("__bucket", lit(0))
+      .withColumn("__bucket_p", lit(0))
+      .write.partitionBy("__bucket_p").parquet(s"$path/data/run-000000000-dead0000")
+    Upsert.mergeIntoManifestBucketedParquet(spark, path,
+      Seq((2L, "b")).toDF("key", "v"), Seq("key"), nBuckets = 2)
+    assert(Upsert.readTarget(spark, path).select("key", "v")
+      .as[(Long, String)].collect().toSeq == Seq((2L, "b")))
   }
 
   test("NULL keys: erasure matches merge's null-safe key semantics") {

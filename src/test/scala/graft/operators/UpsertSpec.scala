@@ -245,6 +245,20 @@ class UpsertSpec extends SparkSpecBase {
       .where($"key".isin("k3", "k7")).count() == 0L)
   }
 
+  test("deleteKeysFromParquet refuses a pointer-less __bucket= directory") {
+    val path = Files.createTempDirectory("graft-del-hb").toString + "/t"
+    (0L until 20L).map(k => (k, s"v$k")).toDF("key", "v")
+      .withColumn("__bucket", pmod(xxhash64($"key"), lit(4)).cast("int"))
+      .write.partitionBy("__bucket").parquet(path)
+    val e = intercept[IllegalStateException] {
+      Upsert.deleteKeysFromParquet(spark, path, Seq(5L).toDF("key"), Seq("key"))
+    }
+    assert(e.getMessage.contains("hash-partitioned"), e.getMessage)
+    assert(spark.read.parquet(path).where($"key" === 5L).count() == 1)
+    assert(!new java.io.File(path).listFiles().exists(f =>
+      f.getName.startsWith("snap-") || f.getName == "_current"))
+  }
+
   test("mergeIntoParquet: crash before pointer publish never tears the table") {
     val dir = Files.createTempDirectory("graft-upsert-crash").toString
     val path = s"$dir/table"
